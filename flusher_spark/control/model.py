@@ -20,6 +20,8 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+import pyarrow as pa
+
 JOBS_COLUMNS = [
     "job_id",
     "document",
@@ -37,6 +39,11 @@ JOBS_COLUMNS = [
 ]
 
 RUN_LOG_COLUMNS = ["start", "end", "document", "sheet", "cellrange", "status", "result"]
+
+#: One Arrow schema per control table; all strings but the key and two flags.
+_NON_STRING = {"job_id": pa.int64(), "incremental": pa.bool_(), "refresh_now": pa.bool_()}
+JOBS_SCHEMA = pa.schema([(c, _NON_STRING.get(c, pa.string())) for c in JOBS_COLUMNS])
+RUN_LOG_SCHEMA = pa.schema([(c, pa.string()) for c in RUN_LOG_COLUMNS])
 
 #: States (reference manager.py:90,106,124,179).
 STATE_RUNNING = "Running"
@@ -62,9 +69,6 @@ class Job:
     last_result: str = ""
     lease_ts: str = ""
 
-    def as_row(self) -> list:
-        return [getattr(self, c) for c in JOBS_COLUMNS]
-
 
 @dataclass
 class RunRecord:
@@ -77,6 +81,3 @@ class RunRecord:
     cellrange: str
     status: str
     result: str
-
-    def as_row(self) -> list:
-        return [self.start, self.end, self.document, self.sheet, self.cellrange, self.status, self.result]

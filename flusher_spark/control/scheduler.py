@@ -78,7 +78,7 @@ def due_jobs(
     now_ts = F.to_timestamp(F.lit(now))
     if interval_seconds:
         imap = F.create_map(*[F.lit(x) for kv in interval_seconds.items() for x in kv])
-        secs = imap.getItem(F.col("refresh_interval"))
+        secs = imap[F.col("refresh_interval")]
     else:
         secs = F.lit(None).cast("int")
     last = F.coalesce(
@@ -276,9 +276,9 @@ class Scheduler:
             )
             results.append((job_id, status, result))
         if records:
-            # One log file per tick, not per run — at a 1-second poll cadence
-            # a per-run write is the exact small-files hazard Warehouse.compact
-            # exists to fix. Metrics flush on the same cadence.
+            # One pyarrow-written file per tick, not per run (no Spark job) — at
+            # a 1-second poll cadence a per-run write is the small-files hazard
+            # Warehouse.compact exists to fix. Metrics flush on the same cadence.
             self.store.append_logs(records)
             self.store.append_metrics(self.recorder.drain())
         for hook in self.on_tick:

@@ -24,6 +24,7 @@ from __future__ import annotations
 import json
 import os
 import threading
+import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -32,11 +33,11 @@ from pyspark.sql import DataFrame, SparkSession
 
 # One timestamp format for control-table state and metrics rows alike
 # (instrumentation never imports control, so this direction is cycle-free).
-from flusher_spark.instrumentation import utcnow_iso  # noqa: F401  (re-exported)
+from flusher_spark.instrumentation import METRICS_SCHEMA, utcnow_iso  # noqa: F401  (re-exported)
 from flusher_spark.control.model import (
     EPOCH_NEVER,
-    JOBS_COLUMNS,
-    RUN_LOG_COLUMNS,
+    JOBS_SCHEMA,
+    RUN_LOG_SCHEMA,
     STATE_FAILURE,
     STATE_RUNNING,
     STATE_SUCCESS,
@@ -89,14 +90,12 @@ class JobStore:
         with self._lock:
             self._load()
 
+    def _table(self) -> pa.Table:
+        return pa.Table.from_pylist([j.__dict__ for j in self._jobs.values()], schema=JOBS_SCHEMA)
+
     def _save(self) -> None:
-        rows = [j.__dict__ for j in self._jobs.values()]
-        schema = pa.schema(
-            [(c, pa.int64() if c == "job_id" else pa.bool_() if c in ("incremental", "refresh_now") else pa.string()) for c in JOBS_COLUMNS]
-        )
-        table = pa.Table.from_pylist(rows, schema=schema)
         tmp = self._jobs_path + ".tmp"
-        pq.write_table(table, tmp)
+        pq.write_table(self._table(), tmp)
         os.replace(tmp, self._jobs_path)  # atomic swap: readers never see a torn file
 
     # -- job CRUD -----------------------------------------------------------
@@ -115,15 +114,9 @@ class JobStore:
         return [j for j in self._jobs.values() if j.document]
 
     def jobs_df(self) -> DataFrame:
-        """The jobs table as a DataFrame for Spark-side predicates."""
-        rows = [j.as_row() for j in self._jobs.values()]
-        return self.spark.createDataFrame(
-            rows,
-            "job_id long, document string, sheet string, cellrange string, "
-            "target_system string, destination string, incremental boolean, "
-            "refresh_now boolean, refresh_interval string, last_success string, "
-            "state string, last_result string, lease_ts string",
-        )
+        """The jobs table as a DataFrame for Spark-side predicates, built
+        from Arrow: the due scan over it runs no Python worker or Spark job."""
+        return self.spark.createDataFrame(self._table())
 
     # -- state machine ------------------------------------------------------
 
@@ -197,43 +190,32 @@ class JobStore:
         """Synchronous append — strengthens the reference's fire-and-forget
         daemon-thread log (manager.py:147-164, at-most-once, lost on crash)
         to exactly-recorded. Batched: the scheduler passes a whole tick's
-        records at once and ``coalesce(1)`` writes them as ONE parquet file,
-        so a 1-second poll cadence grows the log directory by at most one
-        file per busy tick instead of one per run."""
-        if not records:
-            return
-        df = self.spark.createDataFrame(
-            [r.as_row() for r in records],
-            "start string, end string, document string, sheet string, "
-            "cellrange string, status string, result string",
-        )
-        df.coalesce(1).write.mode("append").parquet(self._log_path)
+        records at once and they land as ONE parquet file, so a 1-second
+        poll cadence grows the log directory by at most one file per busy
+        tick instead of one per run."""
+        _append_parquet(self._log_path, records, RUN_LOG_SCHEMA)
 
     def run_log(self) -> DataFrame:
-        if not os.path.isdir(self._log_path):
-            return self.spark.createDataFrame([], "start string, end string, document string, sheet string, cellrange string, status string, result string")
-        return self.spark.read.parquet(self._log_path)
+        return self._read_appended(self._log_path, RUN_LOG_SCHEMA)
 
     # -- metrics table (instrumentation.py; reference @instrumented) ---------
-
-    _METRICS_SCHEMA = "ts string, op string, args string, seconds double, rows long"
 
     @property
     def _metrics_path(self) -> str:
         return os.path.join(self.root, "metrics")
 
     def append_metrics(self, metrics: list) -> None:
-        """Persist Recorder output (anything with ``as_row()`` matching
-        METRICS_COLUMNS), batched like append_logs: one file per flush."""
-        if not metrics:
-            return
-        df = self.spark.createDataFrame([m.as_row() for m in metrics], self._METRICS_SCHEMA)
-        df.coalesce(1).write.mode("append").parquet(self._metrics_path)
+        """Persist Recorder output (``Metric`` records, METRICS_COLUMNS),
+        batched like append_logs: one file per flush."""
+        _append_parquet(self._metrics_path, metrics, METRICS_SCHEMA)
 
     def metrics_df(self) -> DataFrame:
-        if not os.path.isdir(self._metrics_path):
-            return self.spark.createDataFrame([], self._METRICS_SCHEMA)
-        return self.spark.read.parquet(self._metrics_path)
+        return self._read_appended(self._metrics_path, METRICS_SCHEMA)
+
+    def _read_appended(self, path: str, schema: pa.Schema) -> DataFrame:
+        if not os.path.isdir(path):
+            return self.spark.createDataFrame(schema.empty_table())
+        return self.spark.read.parquet(path)
 
     # -- pinned schemas (drift detection; SURVEY §1.2) ----------------------
 
@@ -258,3 +240,17 @@ class JobStore:
         with open(tmp, "w") as fh:
             json.dump(schema.jsonValue(), fh)
         os.replace(tmp, path)
+
+
+def _append_parquet(path: str, rows: list, schema: pa.Schema) -> None:
+    """Append dataclass ``rows`` holding ``schema``'s fields to the parquet
+    directory ``path`` as ONE pyarrow-written file (no Spark job). It goes to
+    a hidden temp name, which Spark and pyarrow both skip, and is renamed
+    into place, so a reader never sees a torn file."""
+    if not rows:
+        return
+    os.makedirs(path, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(path, f".{name}.tmp")
+    pq.write_table(pa.Table.from_pylist([vars(r) for r in rows], schema=schema), tmp)
+    os.replace(tmp, os.path.join(path, name))

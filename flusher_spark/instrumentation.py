@@ -33,6 +33,7 @@ from functools import wraps
 
 from datetime import datetime, timezone
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
@@ -61,7 +62,11 @@ def median_seconds(runs: list[float]) -> float:
     return float(statistics.median(runs))
 
 #: Schema of the persisted metrics table (JobStore.append_metrics).
-METRICS_COLUMNS = ("ts", "op", "args", "seconds", "rows")
+METRICS_SCHEMA = pa.schema(
+    [("ts", pa.string()), ("op", pa.string()), ("args", pa.string()),
+     ("seconds", pa.float64()), ("rows", pa.int64())]
+)
+METRICS_COLUMNS = tuple(METRICS_SCHEMA.names)
 
 
 @dataclass(frozen=True)
@@ -71,9 +76,6 @@ class Metric:
     args: str
     seconds: float
     rows: int  # -1 = not observed
-
-    def as_row(self) -> tuple:
-        return (self.ts, self.op, self.args, self.seconds, self.rows)
 
 
 def observed(df: DataFrame, obs: Observation, name: str = "rows") -> DataFrame:

@@ -71,7 +71,7 @@ def stratified_hash_split(
     join, no shuffle)."""
     b = hash_bucket(F.col(key))
     mapping = F.create_map(*[F.lit(x) for kv in test_pct.items() for x in kv])
-    threshold = F.coalesce(mapping.getItem(F.col(strata_col)), F.lit(default_pct))
+    threshold = F.coalesce(mapping[F.col(strata_col)], F.lit(default_pct))
     return df.where(b >= threshold), df.where(b < threshold)
 
 

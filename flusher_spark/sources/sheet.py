@@ -6,9 +6,9 @@ as an untyped cell grid and defers all typing to the BigQuery autodetect load
 
 - ``SheetGrid`` models a worksheet as an in-memory grid of strings (the unit
   a Sheets API fetch returns; a spreadsheet is ≤10M cells by Google's own
-  limit, so a driver-side fetch + ``createDataFrame`` is the right scale
-  trade-off — the *data lake* side is where 100 TB lives, not the
-  control-plane spreadsheets).
+  limit, so a driver-side fetch handed to Spark as one Arrow table is the
+  right scale trade-off — the *data lake* side is where 100 TB lives, not
+  the control-plane spreadsheets).
 - ``read_sheet`` applies the A1 range view (column projection + row slice —
   reference export.py:46-51) with the CORRECT base-26 column arithmetic
   (the reference's is broken past column Z, export.py:22-24; see
@@ -26,6 +26,7 @@ import csv
 import io
 from dataclasses import dataclass, field
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -166,14 +167,15 @@ def read_sheet(
     else:
         data_rows = rows[row_lo - 1 : row_hi]
 
-    # One slice per row (it was computed twice — once for values, once for
-    # the padding length — in the hot driver loop feeding createDataFrame).
+    # An Arrow table of string columns the JVM decodes itself: no pickled
+    # rows or Python worker behind the load, CSV export and infer_schema.
     padded = [
         [str(c) if c is not None else "" for c in sl] + [""] * (width - len(sl))
         for sl in (r[col_lo - 1 : col_hi] for r in data_rows)
     ]
-    schema = T.StructType([T.StructField(n, T.StringType(), True) for n in names])
-    return spark.createDataFrame(padded, schema)
+    columns = list(zip(*padded)) or [()] * width
+    table = pa.Table.from_arrays([pa.array(c, pa.string()) for c in columns], names=names)
+    return spark.createDataFrame(table)
 
 
 # -- untyped → typed ---------------------------------------------------------

@@ -4,6 +4,8 @@ cites the reference behavior it preserves (SURVEY.md §2.A rows 15-24)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from flusher_spark.control.model import Job
@@ -509,3 +511,121 @@ def test_warehouse_rejects_drive_relative_and_reserved_names(env):
         wh._path("C:evil")
     with pytest.raises(ValueError):
         wh._path("foo.__compacting")
+
+
+# -- audit appends: one pyarrow-written file per call ------------------------
+
+LOG_ROWS = [
+    ("2024-06-01T12:00:00", "2024-06-01T12:00:02", "doc", "s1", "", "Success", "g.t1"),
+    ("2024-06-01T12:00:00", "2024-06-01T12:00:03", "doc", "s2", "A1:B", "Failure", "boom"),
+]
+METRIC_ROWS = [
+    ("2024-06-01T12:00:02", "run_job", "{'document': 'doc'}", 1.5, 2),
+    ("2024-06-01T12:00:03", "run_job:failed", "", 0.25, -1),
+]
+
+
+def _records():
+    from flusher_spark.control.model import RunRecord
+    from flusher_spark.instrumentation import Metric
+
+    return [RunRecord(*r) for r in LOG_ROWS], [Metric(*m) for m in METRIC_ROWS]
+
+
+def _spark_legacy_part(spark, path, rows, ddl):
+    """An audit directory as the earlier Spark-written appends left it: a
+    part file plus ``_SUCCESS`` and ``.crc`` side files."""
+    spark.createDataFrame(rows, ddl).coalesce(1).write.mode("append").parquet(path)
+    names = os.listdir(path)
+    assert "_SUCCESS" in names and any(n.endswith(".crc") for n in names)
+
+
+def test_empty_audit_tables_keep_their_schema(spark, tmp_path):
+    from flusher_spark.control.model import RUN_LOG_COLUMNS
+    from flusher_spark.instrumentation import METRICS_COLUMNS
+
+    store = JobStore(spark, str(tmp_path / "control"))
+    log, metrics = store.run_log(), store.metrics_df()
+    assert log.count() == 0 and metrics.count() == 0
+    assert log.columns == RUN_LOG_COLUMNS and {t for _, t in log.dtypes} == {"string"}
+    assert tuple(metrics.columns) == METRICS_COLUMNS
+    assert metrics.dtypes[3:] == [("seconds", "double"), ("rows", "bigint")]
+
+
+def test_appends_join_legacy_spark_written_directories(spark, tmp_path):
+    """Deployments already hold Spark-written audit directories; the
+    pyarrow-written files land beside the old part file, and both Spark and
+    pyarrow read every row back with the table's types."""
+    import pyarrow.parquet as pq
+
+    root = tmp_path / "control"
+    old_log = ("2024-05-01T00:00:00", "2024-05-01T00:00:01", "old", "", "", "Success", "x")
+    old_metric = ("2024-05-01T00:00:01", "run_job", "", 1.0, 7)
+    _spark_legacy_part(spark, str(root / "run_log"), [old_log],
+                       "start string, end string, document string, sheet string, "
+                       "cellrange string, status string, result string")
+    _spark_legacy_part(spark, str(root / "metrics"), [old_metric],
+                       "ts string, op string, args string, seconds double, rows long")
+    store = JobStore(spark, str(root))
+    logs, metrics = _records()
+    store.append_logs(logs)
+    store.append_metrics(metrics)
+    for sub, df, rows in (
+        ("run_log", store.run_log(), [old_log, *LOG_ROWS]),
+        ("metrics", store.metrics_df(), [old_metric, *METRIC_ROWS]),
+    ):
+        assert sorted(map(tuple, df.collect())) == sorted(rows)
+        on_disk = pq.read_table(str(root / sub)).to_pylist()
+        assert sorted(tuple(r.values()) for r in on_disk) == sorted(rows)
+    assert store.metrics_df().dtypes[3:] == [("seconds", "double"), ("rows", "bigint")]
+
+
+def test_each_append_leaves_one_visible_file(spark, tmp_path):
+    import re
+
+    store = JobStore(spark, str(tmp_path / "control"))
+    logs, metrics = _records()
+    for n in (1, 2, 3):
+        store.append_logs(logs)
+        store.append_metrics(metrics)
+        store.append_logs([])  # nothing to record: no file
+        for sub in ("run_log", "metrics"):
+            names = os.listdir(tmp_path / "control" / sub)
+            # Every entry is a finished part file: no temp name left behind.
+            assert len(names) == n
+            assert all(re.fullmatch(r"part-[0-9a-f]{32}\.parquet", x) for x in names)
+    assert store.run_log().count() == 3 * len(LOG_ROWS)
+
+
+def test_appends_launch_no_spark_jobs(spark, tmp_path):
+    store = JobStore(spark, str(tmp_path / "control"))
+    logs, metrics = _records()
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs_in_group(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return tracker.getJobIdsForGroup(group)
+
+    group = f"appends-{os.getpid()}-{id(store)}"
+    assert jobs_in_group(group, lambda: (store.append_logs(logs), store.append_metrics(metrics))) == []
+    # The tracker does see jobs launched from this thread: reading the log
+    # back runs one.
+    assert jobs_in_group(group + "-read", lambda: store.run_log().collect()) != []
+
+
+def test_due_jobs_emits_no_future_warning(env):
+    """The interval lookup indexes the literal map with ``map[col]``;
+    ``getItem(Column)`` is deprecated and warned on every tick."""
+    import warnings
+
+    store, _, _, _ = env
+    store.put(Job(1, "doc", "s1", refresh_interval="2 minutes"))
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", FutureWarning)
+        due = due_jobs(store.jobs_df(), {"2 minutes": 120}, NOW).select("job_id").collect()
+    assert [r["job_id"] for r in due] == [1]

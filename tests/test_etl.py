@@ -173,8 +173,7 @@ def test_read_sheet_jagged_rows_wider_than_header(spark):
     grid = SheetGrid.from_csv("s", "a,b\n1,2,3\n4,5")
     df = read_sheet(spark, grid)
     assert df.columns == ["a", "b", "col_3"]
-    rows = sorted(map(tuple, df.collect()))
-    assert rows == [("1", "2", "3"), ("4", "5", "")]
+    assert [tuple(r) for r in df.collect()] == [("1", "2", "3"), ("4", "5", "")]
 
 
 def test_read_sheet_duplicate_headers_deduped(spark):
@@ -187,6 +186,58 @@ def test_read_sheet_duplicate_headers_deduped(spark):
     schema = infer_schema(df)
     assert {f.dataType.simpleString() for f in schema.fields} == {"bigint"}
     assert cast_with_schema(df, schema).collect()[0][0] == 1
+
+
+@pytest.mark.parametrize(
+    "grid, cellrange, schema, rows",
+    [
+        pytest.param(SheetGrid("h", [["a", "b"]]), "", "struct<a:string,b:string>", [],
+                     id="header_only"),
+        pytest.param(GRID, "A1:C1", "struct<id:string,amount:string,when:string>", [],
+                     id="range_selects_no_data_rows"),
+        pytest.param(GRID, "A9:B12", "struct<id:string,amount:string>", [],
+                     id="range_past_last_row"),
+        pytest.param(SheetGrid("n", [["a", "b"], [None, "x"], ["1", None]]), "",
+                     "struct<a:string,b:string>", [("", "x"), ("1", "")], id="none_cells"),
+        pytest.param(SheetGrid.from_csv("s", "Value,Value,,Value\n1,2,3,4"), "",
+                     "struct<Value:string,Value_2:string,col_3:string,Value_3:string>",
+                     [("1", "2", "3", "4")], id="duplicate_headers"),
+        pytest.param(SheetGrid("e", []), "", "struct<>", [], id="no_rows_at_all"),
+        pytest.param(SheetGrid("nh", [["1", "2"], ["3"]], header=False), "",
+                     "struct<col_1:string,col_2:string>", [("1", "2"), ("3", "")], id="no_header"),
+        pytest.param(SheetGrid("i", [["a"], [1], [2.5]]), "", "struct<a:string>",
+                     [("1",), ("2.5",)], id="non_string_cells"),
+    ],
+)
+def test_read_sheet_edge_cases(spark, grid, cellrange, schema, rows):
+    """The grid enters Spark as an Arrow table of string columns; every
+    degenerate shape keeps its schema and its rows, in grid order."""
+    df = read_sheet(spark, grid, cellrange)
+    assert df.schema.simpleString() == schema
+    assert [tuple(r) for r in df.collect()] == rows
+
+
+def test_read_sheet_keeps_row_order_on_a_large_grid(spark):
+    # 20k rows span more than one Arrow batch (10k records each by default).
+    grid = SheetGrid("big", [["k", "v"], *([str(i), f"v{i}"] for i in range(20_000))])
+    got = [tuple(r) for r in read_sheet(spark, grid).collect()]
+    assert got == [(str(i), f"v{i}") for i in range(20_000)]
+
+
+def test_ingest_with_arrow_conversion_disabled(spark, tmp_path):
+    """A session lent to the engine may run with Arrow conversions off; the
+    sheet's Arrow table does not depend on that setting."""
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        df = read_sheet(spark, GRID)
+        wh = Warehouse(spark, str(tmp_path / "lake"))
+        wh.load(cast_with_schema(df, infer_schema(df)), "t")
+        got = [tuple(r) for r in wh.read("t").orderBy("id").select("id", "amount", "flag").collect()]
+    finally:
+        spark.conf.set(key, prior)
+    assert got == [(1, 1.5, True), (2, 2.5, False), (3, None, True), (4, 4.25, False)]
 
 
 def test_schema_drift_survives_shuffled_lineage(spark):
